@@ -106,7 +106,7 @@ def test_index_state_caches_registry():
     assert any(c is ann._COARSE_CACHE for c in caches)
     assert any(c is knn._QVEC_CACHE for c in caches)
     assert any(c is grid._BOUNDS_CACHE for c in caches)
-    assert any(c is store._FPRINT_CACHE for c in caches)
+    assert any(c is store._STORED_SIG_CACHE for c in caches)
 
 
 def test_prewarm_covers_registered_ann_keys(spark, sf_dir):

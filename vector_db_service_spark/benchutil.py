@@ -51,8 +51,7 @@ def index_state_caches() -> list[dict]:
         ann._COARSE_CACHE,
         knn._QVEC_CACHE,
         grid._BOUNDS_CACHE,
-        store._FPRINT_CACHE,
-        store._STORED_FPRINT_CACHE,
+        store._STORED_SIG_CACHE,
         store._CDC_TREE_CACHE,
         tables._ROW_COUNT_CACHE,
         tables._DIM_CACHE,

@@ -3239,6 +3239,19 @@ def pca_top2_sql(dim: int, rounds: int = PCA_ROUNDS,
     same matvec + rescale followed by the exact integer projection
     step (p = <u, v1>, r_mln = sign-split (p * 1000) // n1,
     u_i -= sign-split (r_mln * v1_i) // 1000)."""
+    return f"""
+WITH {_pca_top2_ctes(dim, rounds, rounds2)}
+SELECT dim_idx, v1_scaled, v2_scaled FROM top2
+"""
+
+
+def _pca_top2_ctes(dim: int, rounds: int, rounds2: int) -> str:
+    """The CTE list of pca_top2_sql (no WITH keyword), ending in
+    `top2(dim_idx, v1_scaled, v2_scaled)`. Consumers append their own
+    CTEs to this list rather than nesting pca_top2_sql as a subquery:
+    in DuckDB 1.0 the nested form of the ~770-stage chain ran past
+    9 GB RSS at sf0.001 (stopped there), while one flat WITH list
+    peaks at ~4.3 GB, the same as pca_top2_sql alone (measured)."""
 
     def sdiv(x: str, y: str) -> str:
         return f"CASE WHEN {x} < 0 THEN -((-({x})) // ({y})) ELSE ({x}) // ({y}) END"
@@ -3285,8 +3298,7 @@ u{r + 1} AS MATERIALIZED (
          u.v - ({sdiv(f'(SELECT r FROM rr{r + 1}) * f.v', '1000')}) AS v
   FROM up{r + 1} u JOIN v1f f ON f.i = u.i
 )""")
-    return f"""
-WITH q AS MATERIALIZED (
+    return f"""q AS MATERIALIZED (
   SELECT list_transform(embedding,
                         x -> CAST(round(CAST(x AS DOUBLE) * {PCA_Q_SCALE})
                                   AS BIGINT)) AS qv
@@ -3306,10 +3318,11 @@ n1 AS MATERIALIZED (SELECT CAST(sum(v * v) AS BIGINT) AS n1 FROM v1f),
 u0 AS MATERIALIZED (
   SELECT i, CAST({PCA_V_SCALE} AS BIGINT) AS v
   FROM generate_series(1, {dim}) t(i)
-),{",".join(u_stages)}
-SELECT CAST(f.i AS INT) AS dim_idx, f.v AS v1_scaled, u.v AS v2_scaled
-FROM v1f f JOIN u{rounds2} u ON u.i = f.i
-"""
+),{",".join(u_stages)},
+top2 AS MATERIALIZED (
+  SELECT CAST(f.i AS INT) AS dim_idx, f.v AS v1_scaled, u.v AS v2_scaled
+  FROM v1f f JOIN u{rounds2} u ON u.i = f.i
+)"""
 
 
 def mutual_knn_triangles(
@@ -4273,10 +4286,8 @@ def pca_project2d_sql(dim: int, rounds: int = PCA_ROUNDS,
     iteration chains unrolled), then the per-vector integer dot with
     the quantized components — order-independent int64 sums, exact."""
     return f"""
-WITH vs AS MATERIALIZED (
-  SELECT dim_idx, v1_scaled, v2_scaled FROM ({pca_top2_sql(dim, rounds, rounds2)})
-),
-q AS (
+WITH {_pca_top2_ctes(dim, rounds, rounds2)},
+pq AS (
   SELECT vec_id, label,
          list_transform(embedding,
                         x -> CAST(round(CAST(x AS DOUBLE) * {PCA_Q_SCALE})
@@ -4286,12 +4297,12 @@ q AS (
 terms AS (
   SELECT vec_id, label, unnest(qv) AS c,
          generate_subscripts(qv, 1) AS j
-  FROM q
+  FROM pq
 )
 SELECT t.vec_id, t.label,
        CAST(sum(t.c * v.v1_scaled) AS BIGINT) AS p1_scaled,
        CAST(sum(t.c * v.v2_scaled) AS BIGINT) AS p2_scaled
-FROM terms t JOIN vs v ON v.dim_idx = t.j
+FROM terms t JOIN top2 v ON v.dim_idx = t.j
 GROUP BY t.vec_id, t.label
 """
 

@@ -8,9 +8,10 @@ rebuilds one library's index on every mutation
   lsh_index/    (vec_id, table_idx, bit) parquet, partitioned by label
   grid_index/   (vec_id, cells, cell_key) parquet, partitioned by label
   grid_bounds/  (mins, maxs) per label — the normalization constants
-  registry/     (algorithm, n_rows, max_vec_id) per label —
-                preferred_index_algorithm + the DATA FINGERPRINT of the
-                embeddings partition the index was built from
+  registry/     (algorithm, source_sig) per label —
+                preferred_index_algorithm + the SOURCE STAMP of the
+                embeddings the index was built from
+  ivf_centroids/, ivf_meta/ (source_sig) — the global IVF coarse index
 
 A rebuild is a DYNAMIC-partition overwrite of exactly one label
 directory (`spark.sql.sources.partitionOverwriteMode=dynamic`), the
@@ -20,16 +21,23 @@ index recompute in the query path. Probe results are identical to the
 derived-frame probes (lsh.search / grid.search), so the same oracle SQL
 checks both.
 
-Existence and freshness are decided through Spark's Hadoop FileSystem
-API, NOT driver-local os.path — on a shared/remote store (the scale
-target) a path invisible to the driver's local FS is not "an empty
-library". ensure_library compares the stored fingerprint (row count +
-max vec_id) against the current data and rebuilds on mismatch, so a
-dataset regenerated under the same sf-tag directory can't serve a stale
-index; a registry written by an older layout (no fingerprint columns)
-is treated as stale. The current-data fingerprint is memoized per
-source-file identity (_FPRINT_CACHE), so a WARM probe is probe-shaped:
-partition-pruned stored-row read + re-rank, no aggregation job.
+Existence is decided through Spark's Hadoop FileSystem API, NOT
+driver-local os.path — on a shared/remote store (the scale target) a
+path invisible to the driver's local FS is not "an empty library".
+Freshness has ONE rule for all durable index state (registry rows,
+ivf_meta, persisted kmeans centers): the build stamps the
+tables.path_signature of the files it read (_source_sig: a library's
+`embeddings.parquet/label=N` directory when the table is partitioned
+that way, else the whole table), and a check rebuilds unless the stored
+stamp equals the current one. Any rewrite of a source part file —
+including an update-only batch that keeps row count and ids — changes
+the stamp; a missing stamp (older layout) or a signature the driver
+cannot stat (None fields) never counts as fresh. A library's stamp is
+read from its own `registry/label=N` directory, so old-layout partitions
+elsewhere in the registry cannot hide the column. Stored stamps are
+memoized on the stored table's own path_signature (_STORED_SIG_CACHE),
+so a WARM probe is probe-shaped: file stats, then a partition-pruned
+stored-row read + re-rank, no extra Spark job.
 
 Concurrency invariant (two sessions probing one stale library both
 rebuild): last-writer-wins is SAFE here because (a) both writers build
@@ -49,6 +57,7 @@ multi-table commits — the operator surface is unchanged.
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -56,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import similarity as sim
-from ..sources.tables import load
+from ..sources.tables import load, path_signature
 from . import grid as grid_ops
 from . import lsh as lsh_ops
 from .knn import query_vector_row, validate_k
@@ -106,36 +115,51 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _data_fingerprint(emb: DataFrame) -> tuple[int, int]:
-    """(n_rows, max_vec_id) of a library's embedding partition — cheap,
-    deterministic, and changes whenever the partition is regenerated or
-    mutated in any row-count/id-visible way."""
-    row = emb.agg(
-        F.count("*").alias("n"), F.coalesce(F.max("vec_id"), F.lit(-1)).alias("mx")
-    ).head()
-    return int(row["n"]), int(row["mx"])
+def _source_sig(sf_dir: str, library: int | None = None) -> str | None:
+    """The freshness stamp of the embeddings a piece of stored index
+    state is built from: tables.path_signature of the library's
+    `label=N` directory when the table is partitioned that way (so a
+    write to another library leaves this one fresh), else of the whole
+    table; None when the files cannot be stat-ed."""
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    part = os.path.join(path, f"label={library}")
+    if library is not None and os.path.isdir(part):
+        path = part
+    sig = path_signature(path)
+    return None if None in sig else json.dumps(sig)
 
 
-_FPRINT_CACHE: dict[tuple, tuple[int, int]] = {}
+_STORED_SIG_CACHE: dict[tuple, str | None] = {}
 
 
-def _data_fingerprint_cached(
-    spark: SparkSession, sf_dir: str, library: int
-) -> tuple[int, int]:
-    """Memoized per (source-file identity, library) — same freshness rule
-    as knn._QVEC_CACHE / grid._BOUNDS_CACHE. A warm stored-index probe
-    must be probe-shaped (partition-pruned read + re-rank), not pay a
-    count/max aggregation job per call; any rewrite of any part file
-    changes tables.path_signature and drops the entry, so a regenerated
-    dataset still triggers the staleness re-check."""
-    from ..sources.tables import path_signature
+def _read_stored_sig(spark: SparkSession, path: str) -> str | None:
+    """The source_sig column of the stamp table at `path`; None when the
+    table has no such column (a layout older than the stamp)."""
+    df = spark.read.parquet(path)
+    if "source_sig" not in df.columns:
+        return None
+    row = df.select("source_sig").head()
+    return None if row is None else row["source_sig"]
 
-    key = (*path_signature(os.path.join(sf_dir, "embeddings.parquet")), library)
-    if key not in _FPRINT_CACHE:
-        _FPRINT_CACHE[key] = _data_fingerprint(
-            load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
-        )
-    return _FPRINT_CACHE[key]
+
+def _is_fresh(spark: SparkSession, stamp_path: str, current: str | None) -> bool:
+    """True iff the stamp stored at `stamp_path` equals `current`. The
+    stored stamp is memoized on the stamp table's own path_signature: a
+    rebuild rewrites that table, so a memo entry never outlives it."""
+    key = path_signature(stamp_path)
+    if current is None or None in key:
+        return False
+    if key not in _STORED_SIG_CACHE:
+        _STORED_SIG_CACHE[key] = _read_stored_sig(spark, stamp_path)
+    return _STORED_SIG_CACHE[key] == current
+
+
+def _remember_stamp(path: str, stamp: str | None) -> None:
+    """Memoize a stamp just written, so the first check after a build
+    reads nothing."""
+    key = path_signature(path)
+    if None not in key:
+        _STORED_SIG_CACHE[key] = stamp
 
 
 def rebuild_library(
@@ -152,6 +176,9 @@ def rebuild_library(
     if algorithm not in ALGORITHMS:
         raise ValueError(f"unknown algorithm {algorithm!r}; expected {ALGORITHMS}")
     base = index_root(sf_dir, root)
+    # stamped BEFORE the build reads the data: a write racing the build
+    # leaves a stamp older than the files, i.e. one spurious rebuild
+    stamp = _source_sig(sf_dir, library)
     emb = load(spark, sf_dir, "embeddings").filter(F.col("label") == library)
 
     # footer-read dim (tables.embedding_dim, zero Spark jobs) replaces the
@@ -189,61 +216,19 @@ def rebuild_library(
                 "label int, mins array<double>, maxs array<double>",
             )
             _dynamic_overwrite(bounds_row, os.path.join(base, "grid_bounds"))
-    # registry row: algorithm + the data fingerprint the index was
-    # built from (flat stores no index structure — I1 — registry only).
-    # The fingerprint is also memoized here so the FIRST warm probe after
-    # a build already skips the aggregation job.
-    from ..sources.tables import path_signature
-
-    n_rows, max_id = _data_fingerprint(emb)
-    fkey = (
-        *path_signature(os.path.join(sf_dir, "embeddings.parquet")),
-        library,
-    )
-    _FPRINT_CACHE[fkey] = (n_rows, max_id)
+    # registry row: algorithm + the source stamp the index was built
+    # from (flat stores no index structure — I1 — registry only)
     reg_row = spark.createDataFrame(
-        [(library, algorithm, n_rows, max_id)],
-        "label int, algorithm string, n_rows long, max_vec_id long",
+        [(library, algorithm, stamp)],
+        "label int, algorithm string, source_sig string",
     )
     _dynamic_overwrite(reg_row, os.path.join(base, "registry"))
+    _remember_stamp(os.path.join(base, "registry", f"label={library}"), stamp)
     return base
 
 
 def _partition_exists(spark: SparkSession, base: str, table: str, library: int) -> bool:
     return _fs_exists(spark, os.path.join(base, table, f"label={library}"))
-
-
-_STORED_FPRINT_CACHE: dict[tuple, tuple[int, int] | None] = {}
-
-
-def _stored_fingerprint(
-    spark: SparkSession, base: str, library: int
-) -> tuple[int, int] | None:
-    """Fingerprint recorded at build time, or None when absent/illegible
-    (no registry, no row for the library, or a pre-fingerprint layout —
-    all of which mean 'stale, rebuild'). Memoized on the registry's own
-    file identity: a rebuild rewrites the registry partition, changing
-    tables.path_signature, so stale memo entries self-invalidate."""
-    from ..sources.tables import path_signature
-
-    reg_path = os.path.join(base, "registry")
-    key = (*path_signature(reg_path), library)
-    if key in _STORED_FPRINT_CACHE:
-        return _STORED_FPRINT_CACHE[key]
-    if not _fs_exists(spark, reg_path):
-        return None  # not cached: absence is cheap to re-detect
-    reg = spark.read.parquet(reg_path)
-    if "n_rows" not in reg.columns or "max_vec_id" not in reg.columns:
-        out: tuple[int, int] | None = None
-    else:
-        row = reg.filter(F.col("label") == library).select("n_rows", "max_vec_id").head()
-        out = (
-            None
-            if row is None or row["n_rows"] is None
-            else (int(row["n_rows"]), int(row["max_vec_id"]))
-        )
-    _STORED_FPRINT_CACHE[key] = out
-    return out
 
 
 def ensure_library(
@@ -255,18 +240,18 @@ def ensure_library(
 ) -> str:
     """Lazy build with STALENESS detection: rebuild the library's stored
     index if its partition is absent (the reference's build-on-first-use,
-    vector_service.py:214-241) OR the stored data fingerprint no longer
-    matches the current embeddings partition (dataset regenerated under
-    the same sf tag)."""
+    vector_service.py:214-241) OR the source stamp in its registry row
+    differs from the current one (any rewrite of the source files — the
+    reference rebuilds on every mutation)."""
     algorithm = algorithm or default_algorithm(library)
     base = index_root(sf_dir, root)
     table = {"lsh": "lsh_index", "grid": "grid_index", "flat": "registry"}[algorithm]
-    stale = not _partition_exists(spark, base, table, library)
-    if not stale:
-        stored = _stored_fingerprint(spark, base, library)
-        current = _data_fingerprint_cached(spark, sf_dir, library)
-        stale = stored is None or stored != current
-    if stale:
+    fresh = _partition_exists(spark, base, table, library) and _is_fresh(
+        spark,
+        os.path.join(base, "registry", f"label={library}"),
+        _source_sig(sf_dir, library),
+    )
+    if not fresh:
         rebuild_library(spark, sf_dir, library, algorithm, root)
     return base
 
@@ -442,35 +427,24 @@ def ensure_ivf_centroids(
     """Materialized IVF coarse index: the per-library centroid table
     written once (build) and READ on every probe — completing the I11
     build-once/query-many story for the ANN side (lsh_index/grid_bounds
-    pattern). Freshness follows the same contract as ensure_library: a
-    stored global fingerprint (n_rows, max_vec_id) is compared against
-    the memoized current-data fingerprint; any dataset rewrite changes
-    tables.path_signature and triggers one rebuild."""
-    from ..sources.tables import path_signature
-
+    pattern). Freshness follows the same rule as ensure_library, on the
+    whole table: ivf_meta holds the source stamp the centroids were
+    built from, and any rewrite of any embeddings part file triggers
+    one rebuild."""
     base = index_root(sf_dir, root)
     cpath = os.path.join(base, "ivf_centroids")
     mpath = os.path.join(base, "ivf_meta")
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    key = ("ivf", *path_signature(emb_path))
-    if key in _FPRINT_CACHE and _fs_exists(spark, cpath):
+    current = _source_sig(sf_dir)
+    if _fs_exists(spark, cpath) and _is_fresh(spark, mpath, current):
         return base
+    from .ann import centroids
 
     emb = load(spark, sf_dir, "embeddings")
-    current = _data_fingerprint(emb)
-    stale = True
-    if _fs_exists(spark, mpath):
-        row = spark.read.parquet(mpath).head()
-        if row is not None and (int(row["n_rows"]), int(row["max_vec_id"])) == current:
-            stale = not _fs_exists(spark, cpath)
-    if stale:
-        from .ann import centroids
-
-        centroids(emb).write.mode("overwrite").partitionBy("label").parquet(cpath)
-        spark.createDataFrame(
-            [current], "n_rows long, max_vec_id long"
-        ).write.mode("overwrite").parquet(mpath)
-    _FPRINT_CACHE[key] = current
+    centroids(emb).write.mode("overwrite").partitionBy("label").parquet(cpath)
+    spark.createDataFrame(
+        [(current,)], "source_sig string"
+    ).write.mode("overwrite").parquet(mpath)
+    _remember_stamp(mpath, current)
     return base
 
 
@@ -485,23 +459,17 @@ def load_km_centers(
     the fitted kmeans|| centers are INDEX STATE — train once, probe
     many — and before this round the memo died with the process, so a
     new session re-paid the distributed fit once per corpus. Returns
-    the persisted centers iff the stored source signature (the same
-    tables.path_signature identity every driver-side memo keys on)
-    matches the embeddings table's CURRENT signature; None on any
-    mismatch or absence, and the caller refits + persists. The read is
+    the persisted centers iff their stored source stamp equals the
+    embeddings table's CURRENT one (_source_sig — the one freshness rule
+    of every stored index table); None on any mismatch, absence or
+    unstat-able source, and the caller refits + persists. The read is
     a bounded n_lists-row collect of a single-file parquet — index
     registry semantics (reference services/vector_service.py:54-464)
     done durably, same contract as ensure_ivf_centroids above."""
-    import json as _json
-
-    from ..sources.tables import path_signature
-
     p = km_centers_path(sf_dir, n_lists, root)
-    if not _fs_exists(spark, p):
+    sig = _source_sig(sf_dir)
+    if sig is None or not _fs_exists(spark, p):
         return None
-    sig = _json.dumps(
-        path_signature(os.path.join(sf_dir, "embeddings.parquet"))
-    )
     # r12 advisor: a partial/corrupt persisted dir (crash between mkdir
     # and part-file write, schema drift, truncated footer) must degrade
     # to a REFIT — which overwrites the bad state — not poison every
@@ -547,16 +515,10 @@ def save_km_centers(
     root: str | None = None,
 ) -> None:
     """Write side of load_km_centers: persists the fitted centers next
-    to the stored IVF index, stamped with the source table's
-    path_signature so a dataset rewrite invalidates them exactly like
-    every other stored-index fingerprint."""
-    import json as _json
-
-    from ..sources.tables import path_signature
-
-    sig = _json.dumps(
-        path_signature(os.path.join(sf_dir, "embeddings.parquet"))
-    )
+    to the stored IVF index, stamped with the source table's _source_sig
+    so a dataset rewrite invalidates them exactly like every other
+    stored index table."""
+    sig = _source_sig(sf_dir)
     df = spark.createDataFrame(
         [(i, [float(x) for x in c], sig) for i, c in enumerate(centers)],
         "list_id int, centroid array<double>, source_sig string",
@@ -768,22 +730,22 @@ def versioned_cdc_tree(
     lifecycle query reads the same committed tree; re-committing the
     identical deterministic history per query was 5x the same three
     write jobs per bench sweep. Keyed by source-file identity
-    (path_signature), so a changed corpus invalidates the tree; the
-    returned manifest is a COPY (consumers may add metadata commits),
-    and the returned directories are READ-ONLY by contract — any
-    consumer that must mutate or delete directories (store_vacuum)
+    (path_signature), so a changed corpus invalidates the tree, and the
+    superseded tree of the same corpus path is dropped and removed when
+    its successor is built (one tree per corpus, not one per corpus
+    change); the returned manifest is a COPY (consumers may add metadata
+    commits), and the returned directories are READ-ONLY by contract —
+    any consumer that must mutate or delete directories (store_vacuum)
     builds its own private tree via versioned_cdc_merge."""
+    import shutil
     import tempfile
 
-    from ..sources.tables import path_signature
-
-    key = (
-        *path_signature(os.path.join(sf_dir, "embeddings.parquet")),
-        "cdc_tree",
-    )
+    key = path_signature(os.path.join(sf_dir, "embeddings.parquet"))
     hit = _CDC_TREE_CACHE.get(key)
     if hit is not None:
         return dict(hit[0]), hit[1]
+    for old in [k for k in _CDC_TREE_CACHE if k[0] == key[0]]:
+        shutil.rmtree(_CDC_TREE_CACHE.pop(old)[1], ignore_errors=True)
     out_dir = tempfile.mkdtemp(prefix="vdbs_timetravel_shared_")
     _defer_cleanup(out_dir)
     manifest, _ = versioned_cdc_merge(spark, sf_dir, out_dir=out_dir)

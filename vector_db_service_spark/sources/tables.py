@@ -267,9 +267,12 @@ def path_signature(path: str) -> tuple:
     table the signature covers every contained part file (max mtime_ns +
     total size + file count) — an in-place rewrite of one partition
     subdirectory changes the signature even when the top-level directory
-    mtime does not. Single-file tables degrade to the one stat. Used by
-    every driver-side memo (query-vector, grid-bounds, IVF-centers,
-    stored-index fingerprint) so all freshness rules agree."""
+    mtime does not. Single-file tables degrade to the one stat; a path
+    that cannot be stat-ed gives None fields. Used by every driver-side
+    memo (query-vector, grid-bounds, IVF-centers) and, JSON-encoded, as
+    the source stamp every durable stored index table carries
+    (store._source_sig, which never counts a None signature as fresh),
+    so all freshness rules agree."""
     import glob
     import os
 
